@@ -25,9 +25,9 @@ broadcast — the classic small-model/big-data iteration).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from bigdatagenomic_spark.sources.local import local_frame
 from bigdatagenomic_spark.sources.tables import load_table
 
 
@@ -176,7 +176,7 @@ def kmeans(
             StructField("centroid", ArrayType(DoubleType()), False),
         ]
     )
-    centroids = spark.createDataFrame(cents, cent_schema)
+    centroids = local_frame(spark, cents, cent_schema)
     return assigned, centroids
 
 

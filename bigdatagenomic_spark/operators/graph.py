@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bigdatagenomic_spark.sources.local import local_frame
+
 
 def out_degrees(edges: DataFrame) -> DataFrame:
     """(id, out_degree) — reference gather-over-OUT_EDGES cardinality."""
@@ -1349,10 +1351,8 @@ def sssp_bellman_ford(
         .agg(F.min("w").alias("w"))
         .localCheckpoint(eager=True)
     )
-    dist = (
-        e.sparkSession.createDataFrame([(source, 0)], "id LONG, dist LONG")
-        .localCheckpoint(eager=True)
-    )
+    # a local relation: no lineage to cut, so the seed needs no pin
+    dist = local_frame(e.sparkSession, [(source, 0)], "id LONG, dist LONG")
     for _ in range(n_rounds):
         relaxed = (
             e.join(dist, e["src"] == dist["id"])

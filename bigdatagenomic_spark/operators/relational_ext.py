@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from bigdatagenomic_spark.functions import md5_long
 from bigdatagenomic_spark.operators.relational import round2_portable
+from bigdatagenomic_spark.sources.local import local_frame
 from bigdatagenomic_spark.sources.tables import load_table
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -1955,9 +1956,7 @@ def q_x_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         for prev, nxt in zip(stats, stats[1:])
         if nxt.lo - prev.hi > 1
     ]
-    spark_seams = spark.createDataFrame(
-        seams, "gap_after LONG, next_present LONG"
-    ) if seams else spark.createDataFrame([], "gap_after LONG, next_present LONG")
+    spark_seams = local_frame(spark, seams, "gap_after LONG, next_present LONG")
     return (
         local.unionByName(spark_seams)
         .select(

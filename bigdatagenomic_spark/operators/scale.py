@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatagenomic_spark.sources.local import local_frame
+
 # count/sum/min/max re-aggregate cleanly; avg must be derived as sum/count
 _COMBINE = {"count": F.sum, "sum": F.sum, "min": F.min, "max": F.max}
 
@@ -104,7 +106,7 @@ def two_phase_rank(
         + [parts.schema[c] for c in group_cols]
         + [StructField("_off", LongType())]
     )
-    off_df = df.sparkSession.createDataFrame(off_rows, schema)
+    off_df = local_frame(df.sparkSession, off_rows, schema)
     local = F.row_number().over(
         W.partitionBy("_pid", *group_cols).orderBy(*order_cols)
     )
@@ -179,7 +181,7 @@ def two_phase_cumsum(
         + [parts.schema[c] for c in group_cols]
         + [StructField("_off", LongType())]
     )
-    off_df = df.sparkSession.createDataFrame(off_rows, schema)
+    off_df = local_frame(df.sparkSession, off_rows, schema)
     local = F.sum(val_col).over(
         W.partitionBy("_pid", *group_cols)
         .orderBy(*order_cols)
@@ -672,7 +674,7 @@ def two_phase_prefix_max(
             StructField("_off", parts.schema[val_col].dataType, True),
         ]
     )
-    off_df = df.sparkSession.createDataFrame(off_rows, schema)
+    off_df = local_frame(df.sparkSession, off_rows, schema)
     end = 0 if inclusive else -1
     local = F.max(val_col).over(
         W.partitionBy("_pid").orderBy(*order_cols).rowsBetween(

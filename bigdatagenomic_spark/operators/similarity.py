@@ -25,6 +25,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from bigdatagenomic_spark.functions import cosine
+from bigdatagenomic_spark.sources.local import local_frame
 from bigdatagenomic_spark.sources.tables import fan_out, load_table
 
 N_QUERIES = 8
@@ -269,8 +270,9 @@ def ivf_centroids_kmeans(
 
 def _centroid_table(spark: SparkSession, cents: list[tuple[int, list[float]]]):
     """(centroid_id, cvec) DataFrame from a driver-side centroid list —
-    a local relation, so downstream collects/broadcasts of it are
-    cluster-job-free."""
+    a ``LocalRelation`` built by :func:`local_frame` (a plain
+    ``createDataFrame(<list>)`` would parallelize a Python RDD), so
+    downstream collects/broadcasts of it are cluster-job-free."""
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -285,7 +287,7 @@ def _centroid_table(spark: SparkSession, cents: list[tuple[int, list[float]]]):
             StructField("cvec", ArrayType(DoubleType()), False),
         ]
     )
-    return spark.createDataFrame([(int(c), v) for c, v in cents], schema)
+    return local_frame(spark, [(int(c), v) for c, v in cents], schema)
 
 
 def _ivf_assign(candidates: DataFrame, cent: DataFrame) -> DataFrame:

@@ -234,6 +234,16 @@ def test_low_byte_budget_forces_doubling_high_budget_walks(spark):
     assert doubled == walked == expected
 
 
+def test_source_not_a_read_assembles_one_all_null_row(spark):
+    """A source id with no read: the path is just that id, no read joins
+    it, and the fold's seed (``try_element_at`` on the empty member
+    array) gives one all-null row instead of an ANSI index error."""
+    rows = [(1, 4, "ACGT", 0, 0.9, [2]), (2, 4, "CGTA", 3, 0.8, [])]
+    for bit_compat in (False, True):
+        _, out = run_pipeline(spark, rows, 999, 2, bit_compat)
+        assert (out.offset, out.length, out.content) == (None, None, None)
+
+
 # ---------------------------------------------------------------------------
 # phase 3b: merge fold — per-case fixtures (FIXTURES.md §A.4.2)
 # ---------------------------------------------------------------------------
