@@ -44,6 +44,7 @@ import functools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bigdatagenomic_spark.operators.graph import fixpoint
 from bigdatagenomic_spark.sources.local import local_frame
 
 PATH_SCHEMA = "pos LONG, read_id LONG"
@@ -155,6 +156,8 @@ DRIVER_WALK_TIME_CAP_ROWS = 20_000_000  # measured walk/doubling crossover
                                # (SCALING.md path-extraction sweep: walk's
                                # per-row driver cost ~7.8 us/row overtakes
                                # pointer doubling around ~20M rows)
+PATH_MAX_ROUNDS = 40           # doubling / pairwise-merge rounds: paths up
+                               # to 2^39 reads converge within the cap
 
 
 def _driver_mem_bytes(spark) -> int:
@@ -195,10 +198,8 @@ def driver_walk_row_budget(spark, bytes_budget: int | None = None) -> int:
 def extract_path(
     reads_with_next: DataFrame,
     source: int,
-    max_rounds: int = 40,
     driver_walk_threshold: int | None = None,
     n_rows_hint: int | None = None,
-    driver_walk_bytes: int | None = None,
 ) -> DataFrame:
     """Extract the ``next_id`` chain from ``source`` as (pos, read_id).
 
@@ -209,16 +210,17 @@ def extract_path(
     selection):
 
     * **small successor table** (row count ≤ the byte-derived budget of
-      :func:`driver_walk_row_budget`, overridable row-wise via
-      ``driver_walk_threshold`` or byte-wise via ``driver_walk_bytes``
-      — the same "fits in one node's memory" regime where Spark would
-      broadcast it): collect the (vid → succ) map and walk the chain
-      driver-side in O(L); one job instead of O(log L) shuffle rounds.
+      :func:`driver_walk_row_budget`, overridable via
+      ``driver_walk_threshold`` — the same "fits in one node's memory"
+      regime where Spark would broadcast it): collect the (vid → succ)
+      map and walk the chain driver-side in O(L); one job instead of
+      O(log L) shuffle rounds.
     * **large graph**: **pointer doubling** — maintain P = the first 2^k
       path positions and T = the 2^k-step successor table; each round
       appends T-shifted copies of P and squares T. O(log L) shuffles
       instead of O(L) supersteps — 17 rounds, not 100k, for a 100k-long
-      chain; ``localCheckpoint`` each round cuts lineage.
+      chain; ``localCheckpoint`` each round cuts lineage. More than
+      ``PATH_MAX_ROUNDS`` rounds raise.
 
     ``next_id == 0`` (or null) is the leaf sentinel (assembly_final.cpp:
     101). Cycles are cut by keeping the minimum position per vertex and
@@ -226,7 +228,7 @@ def extract_path(
     """
     spark = reads_with_next.sparkSession
     if driver_walk_threshold is None:
-        driver_walk_threshold = driver_walk_row_budget(spark, driver_walk_bytes)
+        driver_walk_threshold = driver_walk_row_budget(spark)
     succ = reads_with_next.selectExpr("read_id AS v", "next_id AS s").where(
         "s IS NOT NULL AND s != 0"
     )
@@ -249,36 +251,32 @@ def extract_path(
             v = nxt.get(v)
         return local_frame(spark, order, PATH_SCHEMA)
 
-    # T_k: (v, s) — s is the 2^k-step successor of v
-    t = succ.localCheckpoint(eager=True)
-    # a local relation has no lineage to cut, so the seed needs no pin
-    path = local_frame(spark, [(0, source)], PATH_SCHEMA)
-    step = 1
-    n_vertices = path.count()
-    for _ in range(max_rounds):
-        # extend: every known position pos(v) spawns pos + step at T(v)
-        shifted = (
-            path.join(t, path["read_id"] == t["v"])
-            .select((F.col("pos") + F.lit(step)).alias("pos"), F.col("s").alias("read_id"))
+    def double(state):
+        path, t, hop = state
+        # extend: every known position pos(v) spawns pos + hop at T(v);
+        # _known rides along so the probe is a filter, not a count
+        shifted = path.join(t, path["read_id"] == t["v"]).selectExpr(
+            f"pos + {hop} AS pos", "s AS read_id", "false AS _known"
         )
         new_path = (
-            path.unionByName(shifted)
+            path.selectExpr("pos", "read_id", "true AS _known")
+            .unionByName(shifted)
             .groupBy("read_id")
-            .agg(F.min("pos").alias("pos"))
-            .select("pos", "read_id")
+            .agg(F.expr("min(pos) AS pos"), F.expr("max(_known) AS _known"))
         ).localCheckpoint(eager=True)
-        new_count = new_path.count()
-        converged = new_count == n_vertices
-        path, n_vertices = new_path, new_count
-        if converged:
-            break
-        # square T: 2^k-step ∘ 2^k-step = 2^(k+1)-step
-        t2 = t.select(F.col("v").alias("v2"), F.col("s").alias("mid"))
-        t = (
-            t2.join(t, t2["mid"] == t["v"])
-            .select(F.col("v2").alias("v"), F.col("s"))
-        ).localCheckpoint(eager=True)
-        step *= 2
+
+        def advance():
+            # square T: 2^k-step ∘ 2^k-step = 2^(k+1)-step
+            t2 = t.select(F.col("v").alias("v2"), F.col("s").alias("mid"))
+            t_sq = t2.join(t, t2["mid"] == t["v"]).select(F.col("v2").alias("v"), "s")
+            return new_path.select("pos", "read_id"), t_sq.localCheckpoint(eager=True), hop * 2
+
+        return new_path.where("NOT _known"), advance
+
+    # T starts as the pinned 1-step successor table; the path seed is a
+    # local relation, which has no lineage to cut and needs no pin
+    seed = local_frame(spark, [(0, source)], PATH_SCHEMA), succ.localCheckpoint(eager=True), 1
+    (path, _, _), _ = fixpoint(seed, double, PATH_MAX_ROUNDS, "extract_path doubling")
     return path.orderBy("pos")
 
 
@@ -407,7 +405,6 @@ def merge_path_pairwise(
     path: DataFrame,
     reads: DataFrame,
     bit_compat: bool = False,
-    max_rounds: int = 40,
 ) -> DataFrame:
     """Scale fallback for R7: log2(L) rounds of pairwise adjacent merges.
 
@@ -420,20 +417,20 @@ def merge_path_pairwise(
     backtrack into already-'N'-padded gaps the sequential fold is
     authoritative (its B'-no-op is not associative) — use ``merge_path``.
     """
-    cur = _members(path, reads).localCheckpoint(eager=True)
-    n = cur.count()
-    rounds = 0
-    while n > 1 and rounds < max_rounds:
-        cur = (
+
+    def pair_up(cur: DataFrame):
+        # positions stay 0..n-1 (pair = pos div 2), so a row past
+        # position 0 means more than one interval is left (a path with
+        # gaps only adds no-op rounds on its last row)
+        return cur.where(F.col("pos") > 0), lambda: (
             cur.groupBy(F.floor(F.col("pos") / 2).alias("pair"))
             .agg(F.expr(_SORTED_MEMBERS))
-            .select(
-                F.col("pair").alias("pos"), F.expr(_fold_sql(bit_compat)).alias("m")
-            )
+            .select(F.col("pair").alias("pos"), F.expr(_fold_sql(bit_compat)).alias("m"))
             .select("pos", "m.offset", "m.length", "m.content")
         ).localCheckpoint(eager=True)
-        n = cur.count()
-        rounds += 1
+
+    members = _members(path, reads).localCheckpoint(eager=True)
+    cur, _ = fixpoint(members, pair_up, PATH_MAX_ROUNDS, "merge_path_pairwise")
     return cur.select("offset", "length", "content")
 
 

@@ -9,13 +9,18 @@ general graph work (entity resolution over co-occurrence graphs being
 the training-data-pipeline use case: q_graph_cc groups orders into
 co-purchase components).
 
-Scale notes: every superstep is one shuffle on vertex id. The driver
-loop localCheckpoints each round — iterative lineage otherwise grows
-unboundedly and re-executes from the scan on every action. Convergence
-is checked per round by carrying the round-start label alongside the
-new one (a filter + isEmpty on the checkpointed frame — no extra join);
-hash-min propagation needs O(component diameter) rounds, which is small
-for the short-diameter graphs entity resolution produces — for
+Scale notes: every superstep is one shuffle on vertex id. Every
+convergence loop here and in assembly.py runs through :func:`fixpoint`,
+the one place rounds are counted, convergence is tested (an isEmpty
+on a probe frame the round returns) and a cap raises instead of
+returning a partial result. Each round localCheckpoints its state —
+iterative lineage otherwise grows unboundedly and re-executes from the
+scan on every action. Fixed-count loops (pagerank, lpa, hits, ...)
+stay plain ``for`` loops. Min-label propagation carries the
+round-start label alongside the new one, so its probe is a filter on
+the checkpointed frame — no extra join. Hash-min propagation needs
+O(component diameter) rounds, which is small for the short-diameter
+graphs entity resolution produces — for
 adversarial long-path graphs, extract_path-style pointer doubling
 (assembly.py) is the O(log n) alternative.
 """
@@ -67,16 +72,71 @@ def aggregate_messages(
     return joined.groupBy("id").agg(getattr(F, combine)("_msg").alias("msg_agg"))
 
 
-def connected_components(
-    edges: DataFrame, max_rounds: int = 30
-) -> DataFrame:
+CC_MAX_ROUNDS = 30  # hash-min + pointer-jump rounds (O(log diameter))
+
+
+def fixpoint(state, step, max_rounds: int, what: str):
+    """Run ``step`` to a fixpoint: the one place the graph and assembly
+    loops count rounds, test convergence and enforce their caps.
+
+    ``step(state)`` returns ``(probe, advance)``. An empty ``probe`` (one
+    ``isEmpty`` job) means ``state`` is the fixpoint; otherwise
+    ``advance()`` builds the next state, so work only that state needs
+    is skipped in the converging round. Returns ``(state, rounds)``,
+    counting the converging round; a probe still non-empty in round
+    ``max_rounds`` raises instead of returning a partial result.
+    """
+    for rounds in range(1, max_rounds + 1):
+        probe, advance = step(state)
+        if probe.isEmpty():
+            return state, rounds
+        state = advance()
+    raise RuntimeError(f"{what} did not converge within {max_rounds} rounds")
+
+
+def propagate_min_label(
+    labels: DataFrame, edges: DataFrame, col: str, direction: str, max_rounds: int, what: str
+) -> tuple[DataFrame, int]:
+    """Min-label propagation to a fixpoint: each round every vertex of
+    ``labels`` (id, ``col``) adopts the least label among its own and
+    those :func:`aggregate_messages` gathers along ``edges`` in
+    ``direction``, then its label's label. Returns (labels, rounds)."""
+
+    def least(other: str) -> Column:
+        return F.least(F.col(col), F.coalesce(other, F.col(col))).alias(col)
+
+    def step(cur: DataFrame):
+        gathered = aggregate_messages(cur, edges, F.col(col), "min", direction)
+        stepped = cur.join(gathered, "id", "left").select(
+            "id", F.col(col).alias("_old"), least("msg_agg")
+        )
+        # pointer jumping: also adopt the label OF my label, which squares
+        # the propagation distance per round — convergence in
+        # O(log diameter) rounds instead of O(diameter), the difference
+        # between ~7 and ~100+ shuffles on a long-chain 100 TB graph
+        parents = stepped.select(F.col("id").alias(col), F.col(col).alias("_parent"))
+        new = (
+            stepped.join(parents, col, "left")
+            .select("id", "_old", least("_parent"))
+            .localCheckpoint(eager=True)
+        )
+        # the round-start label rides along as _old, so "anything
+        # changed?" is a filter on the frame just checkpointed — no
+        # per-round (new ⋈ old) shuffle join
+        return new.where(F.col(col) != F.col("_old")), lambda: new.select("id", col)
+
+    return fixpoint(labels, step, max_rounds, what)
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """(id, component) — component = min vertex id reachable (undirected).
 
     Hash-min label propagation: every vertex repeatedly adopts the
     smallest label among itself and its neighbors, until a round changes
-    nothing. Edges are symmetrized once up front; each round is one
-    aggregate_messages shuffle + a changed-count check, with
-    localCheckpoint cutting lineage.
+    nothing. Edges are symmetrized once up front; each round is
+    :func:`propagate_min_label`'s aggregate_messages shuffle plus an
+    ``isEmpty`` probe on changed labels, with localCheckpoint cutting
+    lineage. More than ``CC_MAX_ROUNDS`` rounds raise.
 
     Deliberately NOT adaptive (no small-graph driver union-find): the
     measured cost is dominated by materializing the edge pipeline into
@@ -108,47 +168,9 @@ def connected_components(
         .withColumn("component", F.col("id"))
         .localCheckpoint(eager=False)
     )
-    for _ in range(max_rounds):
-        neighbor_min = aggregate_messages(
-            labels.select("id", "component"),
-            sym,
-            msg=F.col("component"),
-            combine="min",
-            direction="out",
-        )
-        stepped = labels.join(neighbor_min, "id", "left").select(
-            "id",
-            F.col("component").alias("_old"),
-            F.least(
-                F.col("component"), F.coalesce("msg_agg", F.col("component"))
-            ).alias("component"),
-        )
-        # pointer jumping: also adopt the label OF my label, which squares
-        # the propagation distance per round — convergence in
-        # O(log diameter) rounds instead of O(diameter), the difference
-        # between ~7 and ~100+ shuffles on a long-chain 100 TB graph
-        parents = stepped.select(
-            F.col("id").alias("component"), F.col("component").alias("_parent")
-        )
-        new_labels = (
-            stepped.join(parents, "component", "left")
-            .select(
-                "id",
-                "_old",
-                F.least(
-                    F.col("component"), F.coalesce("_parent", F.col("component"))
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # convergence check: the round-start label rides along as _old,
-        # so "anything changed?" is a filter on the frame just
-        # checkpointed — no per-round (new ⋈ old) shuffle join, and
-        # isEmpty short-circuits at the first changed row
-        converged = new_labels.where(F.col("component") != F.col("_old")).isEmpty()
-        labels = new_labels.select("id", "component")
-        if converged:
-            break
+    labels, _ = propagate_min_label(
+        labels, sym, "component", "out", CC_MAX_ROUNDS, "connected_components"
+    )
     return labels
 
 
@@ -451,12 +473,12 @@ def k_core(
     Plan per round: one map-side-combined degree aggregate over the
     surviving symmetrized edge set + two semi-joins on the vertex key
     to drop edges touching a peeled vertex; `localCheckpoint` cuts the
-    lineage and the fixpoint test is an `isEmpty` on peeled vertices
-    (the CC convergence pattern at :136). Rounds are data-dependent —
-    each round removes at least one vertex (worst case a path peels
-    two ends per round); the testdata co-purchase slices converge in
-    2-12 rounds and ``max_rounds`` bounds the pathological case. The DuckDB oracle
-    replays peeling UNROLLED to KCORE_ORACLE_ROUNDS — extra rounds
+    lineage and :func:`fixpoint` tests an `isEmpty` on peeled vertices.
+    Rounds are data-dependent — each round removes at least one vertex
+    (worst case a path peels two ends per round); the testdata
+    co-purchase slices converge in 2-12 rounds, and a graph that needs
+    more than ``max_rounds`` (a 90-vertex path, for one) raises. The
+    DuckDB oracle replays peeling UNROLLED to KCORE_ORACLE_ROUNDS — extra rounds
     past the fixpoint are no-ops, so the replay is exact whenever the
     data converges within the bound (asserted by the convergence test
     in tests/test_graph.py).
@@ -478,22 +500,20 @@ def k_core(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    rounds_used = 0
-    for _ in range(max_rounds):
+
+    def peel(e: DataFrame):
         deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-        peeled = deg.where(F.col("deg") < k).select("src")
-        if peeled.isEmpty():
-            break
-        rounds_used += 1
         keep = deg.where(F.col("deg") >= k).select("src")
-        e = (
+        return deg.where(F.col("deg") < k), lambda: (
             e.join(keep, "src", "left_semi")
             .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
             .select("src", "dst")
             .localCheckpoint(eager=True)
         )
+
+    e, rounds = fixpoint(e, peel, max_rounds, "k_core")
     if rounds_out is not None:
-        rounds_out.append(rounds_used)
+        rounds_out.append(rounds - 1)  # the last round peeled nothing
     return (
         e.groupBy(F.col("src").alias("id"))
         .agg(F.count("*").cast("long").alias("core_degree"))
@@ -985,8 +1005,12 @@ def strongly_connected_components(
     4. Assign marked vertices ``scc = color``, remove them, repeat:
        each outer round clears at least every source SCC of the
        remaining SCC-DAG, so outer rounds are bounded by the SCC-DAG
-       chain depth (the ``max_outer`` cap; convergence on the testdata
-       graphs is pinned by tests).
+       chain depth.
+
+    Every loop runs through :func:`fixpoint`: ``max_outer`` caps the
+    outer rounds, the last of which must find no vertex left, and
+    ``max_rounds`` each trim, color and mark loop. A loop that hits
+    its cap raises ``RuntimeError`` — never a partial result.
 
     Self-loops are dropped up front (singleton SCCs exist with or
     without them; trim then classifies correctly). Scale shape: every
@@ -995,7 +1019,9 @@ def strongly_connected_components(
     exactly as in the CC/k-core loops.
 
     ``stats_out`` (if given a dict) receives the executed round counts
-    {outer, trim, color, mark} — each trim round costs two ``distinct``
+    {outer, trim, color, mark}: outer counts the SCC-DAG levels peeled,
+    the inner counts include each loop's converging round. Each trim
+    round costs two ``distinct``
     projections, two semi-joins and an ``isEmpty`` driver action, so
     these counts ARE the driver-side job budget the ×N scale sweep
     (tools/scale_check_graph.py) pins: replica-disjoint growth must not
@@ -1015,83 +1041,47 @@ def strongly_connected_components(
     )
     pieces: list[DataFrame] = []
     stats = {"outer": 0, "trim": 0, "color": 0, "mark": 0}
-    e = e_all
-    for _ in range(max_outer):
+    what = "strongly_connected_components"
+
+    def restrict(e: DataFrame, keep: DataFrame) -> DataFrame:
+        return (
+            e.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
+            .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
+            .localCheckpoint(eager=True)
+        )
+
+    # ---- 1. trim singleton SCCs (no in- or no out-edge) ----
+    def trim(state):
+        remaining, e = state
+        has_out = e.select(F.col("src").alias("id")).distinct()
+        has_in = e.select(F.col("dst").alias("id")).distinct()
+        core = (
+            remaining.join(has_out, "id", "left_semi")
+            .join(has_in, "id", "left_semi")
+            .localCheckpoint(eager=True)
+        )
+        trimmed = remaining.join(core, "id", "left_anti")
+
+        def advance():
+            pieces.append(trimmed.withColumn("scc", F.col("id")).localCheckpoint(eager=True))
+            return core, restrict(e, core)
+
+        return trimmed, advance
+
+    def peel_level(remaining: DataFrame, e: DataFrame):
+        (remaining, e), n = fixpoint((remaining, e), trim, max_rounds, what + " trim")
+        stats["trim"] += n
         if remaining.isEmpty():
-            break
-        stats["outer"] += 1
-        # ---- 1. trim singleton SCCs (no in- or no out-edge) ----
-        for _ in range(max_rounds):
-            stats["trim"] += 1
-            has_out = e.select(F.col("src").alias("id")).distinct()
-            has_in = e.select(F.col("dst").alias("id")).distinct()
-            core = (
-                remaining.join(has_out, "id", "left_semi")
-                .join(has_in, "id", "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            trimmed = remaining.join(core, "id", "left_anti")
-            if trimmed.isEmpty():
-                break
-            pieces.append(
-                trimmed.select("id", F.col("id").alias("scc")).localCheckpoint(
-                    eager=True
-                )
-            )
-            remaining = core
-            e = (
-                e.join(core.withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(core.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                .localCheckpoint(eager=True)
-            )
-        if remaining.isEmpty():
-            break
+            return remaining, e
         # ---- 2. color: forward min-label to fixpoint ----
-        labels = remaining.select("id", F.col("id").alias("color")).localCheckpoint(
-            eager=True
+        labels = remaining.withColumn("color", F.col("id")).localCheckpoint(eager=True)
+        labels, n = propagate_min_label(
+            labels, e, "color", "in", max_rounds, what + " color"
         )
-        for _ in range(max_rounds):
-            stats["color"] += 1
-            incoming = (
-                e.join(labels, e["src"] == labels["id"])
-                .select(e["dst"].alias("id"), F.col("color").alias("_msg"))
-                .groupBy("id")
-                .agg(F.min("_msg").alias("_msg"))
-            )
-            stepped = labels.join(incoming, "id", "left").select(
-                "id",
-                F.col("color").alias("_old"),
-                F.least(
-                    F.col("color"), F.coalesce("_msg", F.col("color"))
-                ).alias("color"),
-            )
-            # pointer jump: whoever reaches my color also reaches me
-            parents = stepped.select(
-                F.col("id").alias("color"), F.col("color").alias("_parent")
-            )
-            new_labels = (
-                stepped.join(parents, "color", "left")
-                .select(
-                    "id",
-                    "_old",
-                    F.least(
-                        F.col("color"), F.coalesce("_parent", F.col("color"))
-                    ).alias("color"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            converged = new_labels.where(
-                F.col("color") != F.col("_old")
-            ).isEmpty()
-            labels = new_labels.select("id", "color")
-            if converged:
-                break
+        stats["color"] += n
+
         # ---- 3. mark: backward reach to the root over same-color edges ----
-        marked = labels.where(F.col("color") == F.col("id")).localCheckpoint(
-            eager=True
-        )
-        for _ in range(max_rounds):
-            stats["mark"] += 1
+        def mark(marked: DataFrame):
             preds = (
                 e.join(marked, e["dst"] == marked["id"])
                 .select(e["src"].alias("id"), marked["color"].alias("_mc"))
@@ -1100,37 +1090,25 @@ def strongly_connected_components(
                 .select("id", "color")
                 .distinct()
             )
-            new_marked = preds.join(marked, "id", "left_anti").localCheckpoint(
-                eager=True
-            )
-            if new_marked.isEmpty():
-                break
-            marked = marked.unionByName(new_marked).localCheckpoint(eager=True)
+            new = preds.join(marked, "id", "left_anti").localCheckpoint(eager=True)
+            return new, lambda: marked.unionByName(new).localCheckpoint(eager=True)
+
+        roots = labels.where(F.col("color") == F.col("id")).localCheckpoint(eager=True)
+        marked, n = fixpoint(roots, mark, max_rounds, what + " mark")
+        stats["mark"] += n
         # ---- 4. assign and shrink ----
-        pieces.append(
-            marked.select("id", F.col("color").alias("scc")).localCheckpoint(
-                eager=True
-            )
-        )
-        remaining = remaining.join(marked, "id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        e = (
-            e.join(remaining.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(remaining.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=True)
-        )
+        pieces.append(marked.withColumnRenamed("color", "scc").localCheckpoint(eager=True))
+        remaining = remaining.join(marked, "id", "left_anti").localCheckpoint(eager=True)
+        return remaining, restrict(e, remaining)
+
+    # the outer probe is the unresolved vertex set: each round peels at
+    # least one SCC-DAG level, so vertices left at the cap raise (ADVICE r8)
+    _, rounds = fixpoint(
+        (remaining, e_all), lambda s: (s[0], lambda: peel_level(*s)), max_outer, what
+    )
+    stats["outer"] = rounds - 1  # the last round found nothing left
     if stats_out is not None:
         stats_out.update(stats)
-    # Non-convergence must be loud, not a silently partial result: the
-    # outer loop peels >=1 SCC-DAG level per round, so leftovers mean
-    # the caps were too small for this graph's DAG depth (ADVICE r8).
-    if not remaining.isEmpty():
-        raise RuntimeError(
-            "strongly_connected_components did not converge within "
-            f"max_outer={max_outer} outer rounds; "
-            f"{remaining.count()} vertices unresolved — raise the caps"
-        )
     if not pieces:  # edge-free input: empty result, src's own dtype
         return edges.select(
             F.col("src").alias("id"), F.col("src").alias("scc")

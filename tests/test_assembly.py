@@ -205,30 +205,24 @@ def test_driver_walk_budget_time_cap_governs_big_drivers(spark):
 
 
 def test_low_byte_budget_forces_doubling_high_budget_walks(spark):
-    """A low bytes budget must push extract_path onto the distributed
-    pointer-doubling strategy and a high budget onto the driver walk;
-    both produce the identical path."""
-    from bigdatagenomic_spark.operators.assembly import DRIVER_WALK_ENTRY_BYTES
-
+    """A row budget below the successor count must push extract_path
+    onto the distributed pointer-doubling strategy and a large budget
+    onto the driver walk; both produce the identical path."""
     n = 30
     rows = [(i, 4, "ACGT", i * 10, 0.5, [i + 1]) for i in range(1, n)] + [
         (n, 4, "ACGT", n * 10, 0.5, [])
     ]
     reads = make_reads(spark, rows)
     with_next = asm.with_next_id(reads, reads_to_edges(reads))
-    # budget of exactly 1 row (< the 29 successor rows) -> doubling
+    # budget of 0 rows (< the 29 successor rows) -> doubling
     doubled = sorted(
         (r.pos, r.read_id)
-        for r in asm.extract_path(
-            with_next, 1, driver_walk_bytes=DRIVER_WALK_ENTRY_BYTES
-        ).collect()
+        for r in asm.extract_path(with_next, 1, driver_walk_threshold=0).collect()
     )
-    # a GiB budget -> driver walk
+    # a budget of 2^30 rows -> driver walk
     walked = sorted(
         (r.pos, r.read_id)
-        for r in asm.extract_path(
-            with_next, 1, driver_walk_bytes=1 << 30
-        ).collect()
+        for r in asm.extract_path(with_next, 1, driver_walk_threshold=1 << 30).collect()
     )
     expected = [(i, i + 1) for i in range(n)]
     assert doubled == walked == expected

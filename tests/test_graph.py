@@ -795,3 +795,63 @@ def test_scc_empty_and_nonconvergent_inputs(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         strongly_connected_components(chain, max_outer=1)
+
+
+def test_fixpoint_raises_after_exactly_max_rounds_steps(spark):
+    """A probe that never empties is a cap hit: fixpoint raises after
+    exactly ``max_rounds`` steps instead of returning the last state."""
+    from bigdatagenomic_spark.operators.graph import fixpoint
+
+    never_empty = spark.range(1)
+    calls = []
+
+    def step(state):
+        calls.append(state)
+        return never_empty, lambda: state + 1
+
+    with pytest.raises(RuntimeError, match="probe loop did not converge within 3"):
+        fixpoint(0, step, 3, "probe loop")
+    assert calls == [0, 1, 2]
+    # an empty probe returns the state it was given and the step count
+    assert fixpoint(7, lambda s: (never_empty.limit(0), None), 3, "x") == (7, 1)
+
+
+def test_k_core_of_long_path_raises_at_cap(spark):
+    """The 2-core of a path is empty, but peeling a 90-vertex path two
+    ends per round needs 45 rounds: past KCORE_MAX_ROUNDS the cap must
+    raise, not return the half-peeled middle as a core."""
+    from bigdatagenomic_spark.operators.graph import k_core
+
+    path = _edges(spark, [(i, i + 1) for i in range(89)])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        k_core(path, k=2).count()
+
+
+def test_cc_jobs_per_call_pinned(spark):
+    """Spark jobs one connected_components call runs, collect included:
+    a refactor of the round loop cannot add a job per round unnoticed.
+    The shuffle width is the fixture's, set here because other tests'
+    sessions may change it."""
+    sc = spark.sparkContext
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+
+    def jobs(group, edges):
+        sc.setJobGroup(group, group, False)
+        try:
+            rows = connected_components(edges).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+    try:
+        islands = _edges(spark, [(1, 2), (2, 3), (10, 11), (12, 11), (20, 20)])
+        n_islands, rows = jobs("cc-pin-islands", islands)
+        assert len(rows) == 7
+        chain = _edges(spark, [(i, i + 1) for i in range(64)])
+        n_chain, rows = jobs("cc-pin-chain", chain)
+        assert {r.component for r in rows} == {0} and len(rows) == 65
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    assert (n_islands, n_chain) == (21, 66)

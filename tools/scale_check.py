@@ -143,7 +143,7 @@ def main() -> int:
                 else {"n_rows_hint": n}  # budget picks the driver walk
             )
             t0 = time.time()
-            got = extract_path(reads, source=1, max_rounds=40, **kw).count()
+            got = extract_path(reads, source=1, **kw).count()
             sec = round(time.time() - t0, 3)
             assert got == n, (strategy, n, got)
             per[f"n{n}"] = sec
